@@ -114,15 +114,8 @@ object Bench {
     t.start()
   }
 
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  private def newSession(cpus: Int): SparkSession = {
+    val spark = graft.core.Sessions.local(cpus)
     activeContext = Some(spark.sparkContext)
     // bring up executor threads, noop committer, codegen paths before
     // the first timed run. Cancellation-tolerant: past the deadline the
@@ -135,7 +128,8 @@ object Bench {
     spark
   }
 
-  private def force(df: org.apache.spark.sql.DataFrame): Unit =
+  /** Materializes every output column: the noop sink, not count(). */
+  private[graft] def force(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
   /** Seconds, min over up to Runs (later runs are skipped once past the
@@ -220,48 +214,20 @@ object Bench {
     * the child's Spark boilerplate flooded the harness's merged
     * stdout+stderr tail and buried every JSON partial the parent printed.
     */
-  private def freshProcessTime(name: String, sfDir: String, cpus: String,
+  private def freshProcessTime(name: String, sfDir: String,
       maxWaitSec: Double): Option[Double] = {
     if (maxWaitSec < 5) return None
-    import scala.jdk.CollectionConverters._
-    val javaBin = sys.props("java.home") + "/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xrunjdwp"))
-    val cmd = (Seq(javaBin) ++ jvmArgs ++
-      Seq("-cp", sys.props("java.class.path"), "graft.Bench")).asJava
-    val pb = new ProcessBuilder(cmd)
-    pb.environment().put("SPARK_GRAFT_ONLY", name)
-    pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-    pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-    pb.environment().remove("SPARK_GRAFT_SHARED")
-    pb.environment().put("SPARK_GRAFT_CHILD", "1") // recursion guard
-    pb.redirectErrorStream(false)
-    pb.redirectError(ProcessBuilder.Redirect.DISCARD)
     try {
-      val p = pb.start()
-      // Drain stdout on its own thread: readAllBytes() on the calling
-      // thread blocks until the child closes stdout, which made the
-      // waitFor timeout below dead code (a wedged child hung the parent
-      // forever instead of being destroyed after the budget).
-      val outBuf = new java.io.ByteArrayOutputStream()
-      val drain = new Thread(() => {
-        try p.getInputStream.transferTo(outBuf)
-        catch { case _: Exception => () }
-      })
-      drain.setDaemon(true)
-      drain.start()
-      val done = p.waitFor(maxWaitSec.toLong,
-        java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) { p.destroyForcibly(); return None }
-      drain.join(10000)
-      if (p.exitValue() != 0) return None
-      val out = outBuf.toString("UTF-8")
-      // last machine line carries "queries":{"qNN":t}; short key = prefix
-      val k = shortKey(name)
-      val re = ("\"" + java.util.regex.Pattern.quote(k) + "\":(-?[0-9.]+)").r
-      re.findAllMatchIn(out).map(_.group(1).toDouble).toSeq.lastOption
-        .filter(_ >= 0)
+      graft.core.ChildJvm.run("graft.Bench", timeoutSec = maxWaitSec.toLong,
+        env = Map("SPARK_GRAFT_ONLY" -> name, "SPARK_GRAFT_SF_DIR" -> sfDir,
+          "SPARK_GRAFT_SHARED" -> "0",
+          "SPARK_GRAFT_CHILD" -> "1")) // recursion guard
+        .collect { case (0, out) =>
+          // last machine line carries "queries":{"qNN":t}; short key = prefix
+          val k = shortKey(name)
+          val re = ("\"" + java.util.regex.Pattern.quote(k) + "\":(-?[0-9.]+)").r
+          re.findAllMatchIn(out).map(_.group(1).toDouble).toSeq.lastOption
+        }.flatten.filter(_ >= 0)
     } catch { case _: Exception => None }
   }
 
@@ -329,7 +295,7 @@ object Bench {
     // Files.createTempDirectory("graft_…") dirs share the prefix)
     if (!sys.env.get("SPARK_GRAFT_CHILD").contains("1")) cleanScratch()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.core.Sessions.cpus
     val shared = sys.env.get("SPARK_GRAFT_SHARED").contains("1")
 
     // dev knob: SPARK_GRAFT_ONLY=q41,q46 times just those queries
@@ -402,7 +368,7 @@ object Bench {
         if (budget < 5) None
         else {
           rerun += shortKey(name)
-          freshProcessTime(name, sfDir, cpus, math.min(600.0, budget))
+          freshProcessTime(name, sfDir, math.min(600.0, budget))
             .map(f => name -> (if (t < 0) f else math.min(t, f)))
         }
       }.toMap

@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus)
     new java.io.File(outDir).mkdirs()
     // dev knob (same as Bench): SPARK_GRAFT_ONLY=q54,q131 dumps just those
     // queries AND just their oracle entries, so tools/check.py gives a
@@ -45,8 +36,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // one entry at a time: an oracle that cannot be built (q47/q48
+    // without their model artifact) drops only its own entry
+    val json = SparkEntry.queries.keys.toSeq.sorted.filter(keep).flatMap { name =>
+      try SparkEntry.oracle(name).map(sql => s"${q(name)}: ${q(sql)}")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name oracle failed: ${e.getMessage}")
+        None
+      }
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -85,7 +85,17 @@ object Tables {
   *   - averages/slopes are rounded explicitly on both sides;
   *   - timestamps are emitted as `unix_micros` bigints, dates as strings;
   *   - every result has a total ORDER BY (unique tiebreak) on both sides.
+  *
+  * The oracle is built on first access, not at registration: q47/q48's
+  * oracle SQL compiles a model artifact that a host may lack, and
+  * registering the suite must not depend on it.
   */
-final case class GQuery(
-    build: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+final class GQuery(val build: (SparkSession, String) => DataFrame,
+    oracleSql: => Option[String]) {
+  lazy val oracle: Option[String] = oracleSql
+}
+
+object GQuery {
+  def apply(build: (SparkSession, String) => DataFrame,
+      oracle: => Option[String]): GQuery = new GQuery(build, oracle)
+}

@@ -8,9 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * users get them too:
   *
   * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)
-  *     ...
+  *   --conf spark.sql.extensions=graft.functions.GraftExtensions
   *   spark.sql("SELECT cosine_similarity(a.embedding, b.embedding) ...")
   * }}}
   *

@@ -24,7 +24,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 object NativeExpressions {
 
   /** Deterministic affine hash family — shared by the HOF and native
-    * implementations (must stay identical to Dedup.perms).
+    * implementations (must stay identical to NativeExpressionsSpec.perms).
     */
   def minhashPerms(numPerm: Int, prime: Long): (Array[Long], Array[Long]) = {
     val as = new Array[Long](numPerm)

@@ -107,7 +107,7 @@ object Clustering {
     val dim = cents.head.length
     // Mean update WITHOUT a posexplode: one hash aggregate with `dim`
     // per-element avg columns over the assigned frame. The earlier
-    // explode formulation hid a 13× cliff (ProfileLloyd): projection
+    // explode formulation hid a 13× cliff: projection
     // collapse pushed the interpreted argmin expression BELOW the
     // generate, so the k×dim fold re-evaluated once per EXPLODED row —
     // ×dim work per point per iteration (4.0 s → 0.3 s per update at

@@ -49,22 +49,6 @@ object Dedup {
     */
   private val HotDemoteCutoff = 128
 
-  /** Deterministic affine hash family seeds (a_i, b_i), i in [0, numPerm). */
-  private def perms(numPerm: Int): Seq[(Long, Long)] =
-    (0 until numPerm).map { i =>
-      // splitmix64-style spread of the index — fixed, reproducible
-      val a = 1L + 2654435761L * (i + 1) % (Prime - 1)
-      val b = 2246822519L * (i + 1) % Prime
-      (a % (Prime - 1) + 1, b)
-    }
-
-  /** Shingle strings → hashes folded into [0, 2^31) — materialize this ONCE
-    * (as a real column) before fanning out to the perm family, otherwise
-    * every perm re-hashes the strings (64× the work).
-    */
-  def shingleHashes(shingles: Column): Column =
-    transform(shingles, s => pmod(xxhash64(s), lit(Prime)))
-
   /** rotate-left by 5 — bitwise only, safe under ANSI arithmetic. */
   private def rotl5(c: Column): Column =
     call_function("shiftleft", c, lit(5))
@@ -84,18 +68,6 @@ object Dedup {
           rotl5(acc).bitwiseXOR(element_at(th, i + j)))))
       .otherwise(array(aggregate(th, lit(0L),
         (acc, x) => rotl5(acc).bitwiseXOR(x))))
-
-  /** MinHash signature (array<bigint> of length numPerm) over pre-hashed
-    * shingles. h_i(x) = (a_i * x + b_i) mod p with x < 2^31: keeps a_i * x
-    * within Long range (exact math, no wrap), so signatures are identical
-    * on any engine.
-    */
-  def minhashSignature(hashedShingles: Column, numPerm: Int = 64): Column = {
-    val sigs = perms(numPerm).map { case (a, b) =>
-      array_min(transform(hashedShingles, x => pmod(x * a + b, lit(Prime))))
-    }
-    array(sigs: _*)
-  }
 
   /** LSH band keys: (band index, hash of the signature rows in that band).
     * Two docs share a band key iff their signature agrees on all `rowsPerBand`
@@ -367,7 +339,7 @@ object Dedup {
     * maxBucket caps the hot set at occurrences/maxBucket entries, further
     * capped at [[MaxHotShingles]]) and sort AFTER every rare shingle, so
     * boilerplate shingles leave the prefixes of any document that has at
-    * least prefixLen rare shingles. Measured (ProfileQ85, sf0.1, 5 000
+    * least prefixLen rare shingles. Measured (q85, sf0.1, 5 000
     * docs with a shared 30-token header+footer): plain hash order put all
     * 5 000 docs in one prefix bucket — 6.5·10⁷ candidate pairs, 57 s;
     * frequency-aware order: 2.1·10⁵ pairs, max bucket 9. Bloom false
@@ -1459,12 +1431,6 @@ object Dedup {
       .join(broadcast(mapping.withColumnRenamed("component", "__comp")), Seq("id"), "left")
       .select(col("id"), coalesce(col("__comp"), col("id")).as("component"))
   }
-
-  /** [[ccRounds]] opened up for specs (pinning the O(log diameter) round
-    * bound) and the dev profiler (tools.ProfileQ41).
-    */
-  private[graft] def ccProbe(ids: DataFrame, pairs: DataFrame,
-      maxIter: Int = 20): (DataFrame, Int) = ccRounds(ids, pairs, maxIter)
 
   /** The distributed label-propagation loop of [[connectedComponents]],
     * plus the number of rounds actually used. `checkpointDir` switches

@@ -180,12 +180,6 @@ object TextOps {
   def rollingFingerprint(text: Column, window: Int = 32): Column =
     graft.functions.NativeExpressions.rolling_hash_min(text, window)
 
-  /** String-shingle fingerprint (historical formulation; kept only as the
-    * slow reference for tests — concatenates every shingle before hashing).
-    */
-  def fingerprintStringShingles(text: Column, n: Int = 3): Column =
-    array_min(transform(shingles(tokens(text), n), s => xxhash64(s)))
-
   /** Exact top-k tokens WITHOUT a corpus-wide distinct-token aggregation —
     * the scale path for q23's `groupBy(token).count()`. A plain full
     * groupBy must hold every distinct token in the aggregation hash maps

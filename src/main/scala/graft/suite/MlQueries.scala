@@ -129,9 +129,10 @@ object MlQueries {
   private val labOffsets = Vector(5.0, 100.0, 0.4, 15.0, 60.0, 4.0, 20.0, 25.0, 6.0, 40.0, 50.0)
   private val lowBandCut = math.log(1.0 / 3.0)
 
-  // lazy: building the oracle SQL loads the model artifact; deferring it
-  // keeps registry construction host-independent (ADVICE r4) — the path
-  // is only resolved when q47/q48 actually run (override: GRAFT_XGB_CKD_MODEL)
+  // building the oracle SQL loads the model artifact; GQuery defers it to
+  // first oracle access, so registry construction stays host-independent
+  // — the model is only loaded when q47/q48 run or their oracle is read
+  // (override: GRAFT_XGB_CKD_MODEL)
   private lazy val q47 = GQuery(
     (s, dir) => {
       val bc = s.sparkContext.broadcast(ckdModel)

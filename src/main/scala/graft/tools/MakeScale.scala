@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize an sf×N corpus from an existing sf directory so
@@ -53,13 +52,9 @@ object MakeScale {
     // any bench run pointed at a DIFFERENT sf dir
     val out = args.lift(1).getOrElse("/tmp/scale_sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus)
+    // 32-way shuffles whatever the core count
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val docIdSpace = docs.agg(max(col("doc_id"))).head().getLong(0) + 1

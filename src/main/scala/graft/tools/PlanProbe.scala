@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: print the executed plan of an operator COMPOSITION (not a
@@ -13,11 +12,7 @@ object PlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val what = args.lift(1).getOrElse("postingstore")
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.core.Sessions.local(4)
     val docs = graft.core.Tables.documents(s, sfDir)
     val df = what match {
       case "postingstore" => graft.scale.Dedup.containmentPostingStore(

@@ -45,9 +45,9 @@ import scala.collection.mutable
   * (ALL_JARS = the shell glob star; spelled out because Scala comments
   * nest and a literal slash-star would not parse.)
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  * SPARK_GRAFT_CPUS (default 32 — the driver runs Bench with
-  * SPARK_GRAFT_CPUS=32, so reference times must come from the same
-  * session shape).
+  * SPARK_GRAFT_CPUS (default 4, inherited by every child — the driver
+  * runs Bench with SPARK_GRAFT_CPUS=32, so reference times must come
+  * from the same session shape: set it to 32).
   */
 object RefreshRef {
   private val AgreeRatio = 1.3
@@ -68,53 +68,26 @@ object RefreshRef {
   }
 
   /** One child `graft.Bench` JVM over `names`; returns full-name →
-    * min-of-3 seconds parsed from the child's machine line. Same
-    * process recipe as `Bench.freshProcessTime`: inherited classpath +
-    * add-opens, SPARK_GRAFT_CHILD=1 so the child never recurses or
-    * cleans scratch dirs.
+    * min-of-3 seconds parsed from the child's machine line.
+    * SPARK_GRAFT_CHILD=1 so the child never recurses or cleans scratch
+    * dirs.
     */
-  private def childRun(names: Seq[String], sfDir: String,
-      cpus: String): Map[String, Double] = {
-    import scala.jdk.CollectionConverters._
-    val javaBin = sys.props("java.home") + "/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xrunjdwp"))
-    val cmd = (Seq(javaBin) ++ jvmArgs ++
-      Seq("-cp", sys.props("java.class.path"), "graft.Bench")).asJava
-    val pb = new ProcessBuilder(cmd)
-    pb.environment().put("SPARK_GRAFT_ONLY", names.mkString(","))
-    pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-    pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-    pb.environment().remove("SPARK_GRAFT_SHARED")
-    pb.environment().put("SPARK_GRAFT_CHILD", "1")
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+  private def childRun(names: Seq[String], sfDir: String): Map[String, Double] =
     try {
-      val p = pb.start()
-      // Drain stdout on its own thread — readAllBytes() on this thread
-      // blocks until the child closes stdout, which made the waitFor
-      // timeout below unreachable (a wedged child hung the refresh
-      // forever instead of being destroyForcibly'd after 30 minutes).
-      val outBuf = new java.io.ByteArrayOutputStream()
-      val drain = new Thread(() => {
-        try p.getInputStream.transferTo(outBuf)
-        catch { case _: Exception => () }
-      })
-      drain.setDaemon(true)
-      drain.start()
-      val done = p.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)
-      if (!done) { p.destroyForcibly(); return Map.empty }
-      drain.join(10000)
-      if (p.exitValue() != 0) return Map.empty
-      val out = outBuf.toString("UTF-8")
-      // the full-names detail line carries "qNN_full_name":sec
-      val re = """"(q[0-9]+_[a-z0-9_]+)":(-?[0-9.]+)""".r
-      re.findAllMatchIn(out)
-        .map(m => m.group(1) -> m.group(2).toDouble)
-        .filter { case (n, t) => names.contains(n) && t >= 0 }
-        .toMap
+      graft.core.ChildJvm.run("graft.Bench", timeoutSec = 30 * 60,
+        inheritStderr = true,
+        env = Map("SPARK_GRAFT_ONLY" -> names.mkString(","),
+          "SPARK_GRAFT_SF_DIR" -> sfDir, "SPARK_GRAFT_SHARED" -> "0",
+          "SPARK_GRAFT_CHILD" -> "1"))
+        .collect { case (0, out) =>
+          // the full-names detail line carries "qNN_full_name":sec
+          val re = """"(q[0-9]+_[a-z0-9_]+)":(-?[0-9.]+)""".r
+          re.findAllMatchIn(out)
+            .map(m => m.group(1) -> m.group(2).toDouble)
+            .filter { case (n, t) => names.contains(n) && t >= 0 }
+            .toMap
+        }.getOrElse(Map.empty)
     } catch { case _: Exception => Map.empty }
-  }
 
   private def agree(a: Double, b: Double): Boolean =
     (a <= TinySec && b <= TinySec) ||
@@ -149,7 +122,7 @@ object RefreshRef {
   def main(args: Array[String]): Unit = {
     val outPath = args.headOption.getOrElse("bench_ref.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Sessions.cpus
     val stateStart = machineState()
     // smoke-test knob: SPARK_GRAFT_REF_ONLY=q202,q206 refreshes a subset
     // (merged over the existing file, so a partial run never drops
@@ -200,7 +173,7 @@ object RefreshRef {
       var probes = 0
       while (value.isEmpty && probes < 2 + MaxSolo) {
         probes += 1
-        ms = ms ++ childRun(Seq(name), sfDir, cpus).get(name)
+        ms = ms ++ childRun(Seq(name), sfDir).get(name)
         if (ms.size >= 2) value = confirmedValue(ms)
       }
       val v = value.orElse {

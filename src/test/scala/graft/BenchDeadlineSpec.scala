@@ -7,41 +7,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * exit 0 and print the tiny final machine line — with remaining queries
   * reported as SKIPPED when the internal deadline trips, never as
   * failures, and never by dying to the external timeout. Each case runs
-  * Bench as a forked child JVM (the MemoryPressureSpec recipe) against
+  * Bench as a child JVM through [[graft.core.ChildJvm]] against
   * sf0.001 so the gate stays cheap.
   */
 class BenchDeadlineSpec extends AnyFunSuite {
 
   private def runBench(extraEnv: Map[String, String],
       timeoutMin: Int = 10): (Int, String) = {
-    import scala.jdk.CollectionConverters._
-    val javaBin = sys.props("java.home") + "/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xrunjdwp"))
-    val cmd = (Seq(javaBin) ++ jvmArgs ++
-      Seq("-cp", sys.props("java.class.path"), "graft.Bench")).asJava
-    val pb = new ProcessBuilder(cmd)
-    pb.environment().put("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    pb.environment().put("SPARK_GRAFT_CPUS", "4")
-    pb.environment().remove("SPARK_GRAFT_SHARED")
-    extraEnv.foreach { case (k, v) => pb.environment().put(k, v) }
-    pb.redirectErrorStream(false)
-    pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-    val p = pb.start()
-    val outBuf = new java.io.ByteArrayOutputStream()
-    val drain = new Thread(() => {
-      try p.getInputStream.transferTo(outBuf)
-      catch { case _: Exception => () }
-    })
-    drain.setDaemon(true)
-    drain.start()
-    val done = p.waitFor(timeoutMin.toLong,
-      java.util.concurrent.TimeUnit.MINUTES)
-    if (!done) p.destroyForcibly()
-    drain.join(10000)
-    assert(done, "bench child timed out")
-    (p.exitValue(), outBuf.toString("UTF-8"))
+    val res = graft.core.ChildJvm.run("graft.Bench",
+      timeoutSec = timeoutMin * 60L,
+      env = Map("SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
+        "SPARK_GRAFT_CPUS" -> "4", "SPARK_GRAFT_SHARED" -> "0") ++ extraEnv)
+    assert(res.isDefined, "bench child timed out")
+    res.get
   }
 
   private def finalLine(out: String): String = {

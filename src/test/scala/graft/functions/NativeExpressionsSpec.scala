@@ -3,6 +3,7 @@ package graft.functions
 import graft.SparkSpec
 import graft.core.{Tables => T}
 import graft.scale.{Dedup, Similarity, TextOps}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The native codegen expressions must be bit-identical to their
@@ -12,6 +13,29 @@ class NativeExpressionsSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  private val Prime = 2147483647L
+
+  /** Deterministic affine hash family seeds (a_i, b_i), i in [0, numPerm). */
+  private def perms(numPerm: Int): Seq[(Long, Long)] =
+    (0 until numPerm).map { i =>
+      // splitmix64-style spread of the index — fixed, reproducible
+      val a = 1L + 2654435761L * (i + 1) % (Prime - 1)
+      val b = 2246822519L * (i + 1) % Prime
+      (a % (Prime - 1) + 1, b)
+    }
+
+  /** MinHash signature (array<bigint> of length numPerm) over pre-hashed
+    * shingles. h_i(x) = (a_i * x + b_i) mod p with x < 2^31: keeps a_i * x
+    * within Long range (exact math, no wrap), so signatures are identical
+    * on any engine. The HOF reference the native kernel must match.
+    */
+  private def minhashSignature(hashedShingles: Column, numPerm: Int = 64): Column = {
+    val sigs = perms(numPerm).map { case (a, b) =>
+      array_min(transform(hashedShingles, x => pmod(x * a + b, lit(Prime))))
+    }
+    array(sigs: _*)
+  }
+
   test("native minhash == HOF minhash on the documents table") {
     val docs = T.documents(spark, sf)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
@@ -19,7 +43,7 @@ class NativeExpressionsSpec extends SparkSpec {
       .withColumn("sh", Dedup.hashedShingles(col("th"), 3))
       .withColumn("xs", transform(col("sh"), x => pmod(x, lit(2147483647L))))
     val both = docs
-      .withColumn("hof", Dedup.minhashSignature(col("xs"), 64))
+      .withColumn("hof", minhashSignature(col("xs"), 64))
       .withColumn("native", NativeExpressions.minhash_signature(col("xs"), 64))
     assert(both.filter(col("hof") =!= col("native")).count() == 0)
     assert(both.count() == 500)

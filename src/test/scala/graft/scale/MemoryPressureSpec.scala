@@ -17,37 +17,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class MemoryPressureSpec extends AnyFunSuite {
 
   test("exact-pair dedup family completes under a 2g heap (spill, not OOM)") {
-    import scala.jdk.CollectionConverters._
-    val javaBin = sys.props("java.home") + "/bin/java"
     // inherit the suite's add-opens etc., but REPLACE the heap cap
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xrunjdwp") ||
-        a.startsWith("-Xmx") || a.startsWith("-Xms"))
-    val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx2g",
-      "-cp", sys.props("java.class.path"),
-      "graft.tools.PressureProbe", "/root/testdata/sf0.1")).asJava
-    val pb = new ProcessBuilder(cmd)
-    pb.redirectErrorStream(false)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val p = pb.start()
-    // Drain stdout on its own thread so the waitFor timeout below can
-    // actually fire: readAllBytes() on this thread blocks until the child
-    // closes stdout, so a wedged probe would hang sbt test indefinitely
-    // instead of failing after 15 minutes.
-    val outBuf = new java.io.ByteArrayOutputStream()
-    val drain = new Thread(() => {
-      try p.getInputStream.transferTo(outBuf)
-      catch { case _: Exception => () }
-    })
-    drain.setDaemon(true)
-    drain.start()
-    val done = p.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)
-    if (!done) p.destroyForcibly()
-    drain.join(10000)
-    val out = outBuf.toString("UTF-8")
-    assert(done, "pressure probe timed out")
-    assert(p.exitValue() == 0, s"pressure probe failed (rc=${p.exitValue()}):\n$out")
+    // PressureProbe's default corpus is sf0.1
+    val res = graft.core.ChildJvm.run("graft.tools.PressureProbe",
+      timeoutSec = 15 * 60, inheritStderr = true, xmx = Some("2g"))
+    assert(res.isDefined, "pressure probe timed out")
+    val (rc, out) = res.get
+    assert(rc == 0, s"pressure probe failed (rc=$rc):\n$out")
     val line = out.linesIterator.find(_.startsWith("PRESSURE_OK"))
     assert(line.isDefined, s"no PRESSURE_OK line in:\n$out")
     val kv = line.get.split("\\s+").drop(1)
